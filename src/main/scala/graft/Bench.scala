@@ -3,8 +3,10 @@ import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and emits one JSON result line (last stdout line)
-  * plus a copy at SPARK_GRAFT_BENCH_OUT (default /tmp/graft_bench.json)
-  * so the driver can parse it even if the log is noisy. Failures are
+  * plus the full per-query map at SPARK_GRAFT_BENCH_OUT (default
+  * BENCH_FULL_c<cpus>.json) and the summary line at
+  * SPARK_GRAFT_BENCH_SUMMARY (default BENCH_SUMMARY_c<cpus>.json), so a
+  * reader can parse it even if the log is noisy. Failures are
   * recorded per-query as ok=false — a failed query must never masquerade
   * as a fast time.
   */
@@ -46,8 +48,8 @@ object Bench {
     // for profiling runs (never set by the driver; the committed bench
     // numbers use the defaults above).
     sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";").foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) if k.nonEmpty => spark.conf.set(k.trim, v.trim)
+      kv.split("=", 2).map(_.trim) match {
+        case Array(k, v) if k.nonEmpty => spark.conf.set(k, v)
         case _ => ()
       }
     })

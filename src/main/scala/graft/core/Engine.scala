@@ -91,15 +91,16 @@ class GenericDatasource(val spec: DatasourceSpec) {
     * quals insert, databases diff-sync) override [[snapshot]], so they
     * fall back to the per-server path automatically (the `getClass`
     * guard — a subclass that overrides snapshot but not this method
-    * must never silently get the generic transform).
+    * must never silently get the generic transform). A one-server pass
+    * (`Engine.takeSnapshot`) also takes [[snapshot]]: its commit is the
+    * per-server [[Store.snapshotCommit]], no partitionBy fan-out.
     *
     * Returns per-srvid staged row counts (−1 when tracing is off,
     * mirroring [[snapshot]]). Caller holds every server's snapshot
     * lock and has verified each listed srvid HAS a staging partition. */
   def snapshotFleet(store: Store, srvids: Seq[Int],
       now: java.sql.Timestamp): Map[Int, Long] = {
-    if (srvids.isEmpty) return Map.empty
-    if (getClass != classOf[GenericDatasource])
+    if (srvids.sizeIs <= 1 || getClass != classOf[GenericDatasource])
       return srvids.map(id => id -> snapshot(store, id, now)).toMap
     srvids.foreach(recoverPending(store, _))
     // coalesce the scan to the session's parallelism: the staging tier
@@ -287,6 +288,10 @@ object GenericDatasource {
   *     term de-phases servers so a fleet doesn't aggregate in lockstep;
   *   - metas record snapts/aggts/purgets and accumulated errors
   *     (:3490-3497, :3696-3700).
+  *
+  * One tick body serves every entry point — [[takeSnapshot]] (one
+  * server), [[takeSnapshotFleet]] and [[tickDue]] (many): a one-server
+  * tick is the fleet pass over a fleet of one.
   */
 final class Engine(val spark: SparkSession, storageRoot: String) {
   /** History-tier small-file maintenance threshold: when a purge-phase
@@ -325,7 +330,11 @@ final class Engine(val spark: SparkSession, storageRoot: String) {
     * installed — the reference gates on its debug GUC the same way.
     * Installing a sink also turns on the per-snapshot row counting
     * (an extra Spark action per datasource per tick, paid only when
-    * tracing — exactly the reference's debug-GUC gating). */
+    * tracing — exactly the reference's debug-GUC gating). A traced
+    * tick runs the same pooled path as an untraced one: the sink is
+    * called from the ticking thread only, in priority-class then
+    * registration order, after each class's snapshots have joined —
+    * so it needs no thread safety and its sequence is deterministic. */
   private var logSink: String => Unit = _ => ()
   def log: String => Unit = logSink
   def log_=(f: String => Unit): Unit = {
@@ -361,167 +370,18 @@ final class Engine(val spark: SparkSession, storageRoot: String) {
   private val snapshotLocks =
     new java.util.concurrent.ConcurrentHashMap[Int, java.util.concurrent.locks.ReentrantLock]()
 
-  /** One tick. Returns the number of errors (like powa_take_snapshot). */
-  def takeSnapshot(srvid: Int,
-      now: java.sql.Timestamp = new java.sql.Timestamp(System.currentTimeMillis())): Int = {
-    val server = registry.server(srvid)
-    if (server.frequencySec == -1) return 0
-    def fail() = throw new IllegalStateException(
-      s"a concurrent snapshot is already running for server $srvid")
-    val lock = snapshotLocks.computeIfAbsent(srvid,
-      _ => new java.util.concurrent.locks.ReentrantLock())
-    if (!lock.tryLock()) fail()
-    try {
-      val lockDir = java.nio.file.Paths.get(storageRoot, "_locks")
-      java.nio.file.Files.createDirectories(lockDir)
-      val ch = java.nio.channels.FileChannel.open(
-        lockDir.resolve(s"srvid=$srvid.lock"),
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.WRITE)
-      val fileLock =
-        try ch.tryLock()
-        catch { case _: java.nio.channels.OverlappingFileLockException =>
-          ch.close(); fail() }
-      if (fileLock == null) { ch.close(); fail() }
-      try takeSnapshotLocked(srvid, now, server)
-      finally { fileLock.release(); ch.close() }
-    } finally lock.unlock()
-  }
-
-  /** Priority classes of `ds`, ascending — the walk order both tick
-    * forms preserve; members keep their registration order within a
-    * class so error/log sequences stay deterministic. */
-  private def groupByPriority(
-      ds: Seq[GenericDatasource]): Seq[Seq[GenericDatasource]] =
-    ds.groupBy(_.priority).toSeq.sortBy(_._1).map(_._2)
-
-  /** Apply `f` to every member of one priority class and return the
-    * results IN INPUT ORDER. Members run concurrently on a bounded
-    * pool when there is more than one AND no trace sink is installed
-    * (`Store.traceRowcounts` — the trace contract is a sequential log
-    * and user sinks need not be thread-safe); otherwise sequentially,
-    * which is byte-identical to the historical path. `f` must be
-    * error-isolated (snapshot workers catch and RETURN their errors);
-    * anything escaping it is fatal and is rethrown unwrapped so the
-    * caller sees the same throwable the sequential path would. */
-  private def runOrdered[T](group: Seq[GenericDatasource],
-      f: GenericDatasource => T): Seq[T] =
-    if (group.sizeIs <= 1 || store.traceRowcounts) group.map(f)
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(group.size, 4))
-      try group.map { d =>
-        pool.submit(new java.util.concurrent.Callable[T] {
-          def call(): T = f(d)
-        })
-      }.map { fut =>
-        try fut.get()
-        catch { case e: java.util.concurrent.ExecutionException =>
-          throw e.getCause }
-      }
-      finally pool.shutdown()
-    }
-
-  private def takeSnapshotLocked(srvid: Int, now: java.sql.Timestamp,
-      server: ServerConfig): Int = {
-    // re-read the persisted meta row under the snapshot lock: the
-    // coalesce_seq bump is a read-modify-write of the STORED row, so a
-    // second engine sharing the root continues the cadence where the
-    // first left it instead of replaying its stale in-memory copy
-    val meta = registry.refreshMeta(srvid)
-    meta.coalesceSeq += 1
-    var errors = Vector.empty[String]
-
-    // priority-ordered walk (:168-181): databases (−3) before
-    // statements (−2) before kcache (−1) before the generic rest (10),
-    // so dimension providers run before their dependents every tick
-    val active = datasources.filter(d =>
-      registry.isEnabled(srvid, d.name) &&
-      server.versionNum >= d.spec.minVersion).sortBy(_.priority)
-
-    // One datasource's snapshot, error-isolated exactly as before.
-    def snapshotOne(d: GenericDatasource): Option[String] =
-      try {
-        // directory-probe fast path: a tick with nothing staged for
-        // this datasource launches zero Spark jobs (every snapshot
-        // consumes the staging tier, so an absent partition is a no-op)
-        if (store.hasPartition(d.name, GenericDatasource.Staging, srvid)) {
-          log(s"running ${d.name}_snapshot")
-          val n = d.snapshot(store, srvid, now)
-          log(s"${d.name}_snapshot - rowcount: $n")
-        }
-        None
-      } catch { case e: Exception =>
-        Some(s"${d.name}_snapshot: ${e.getMessage}") }
-
-    // Walk priority CLASSES in order (dimension providers before
-    // dependents, as before); datasources WITHIN a class write disjoint
-    // directory trees (<root>/<ds>/…, per-ds commit markers), so their
-    // snapshots are independent — overlap them (guide §2.6: actions are
-    // sequential only because the driver calls them sequentially; a
-    // multi-datasource tick otherwise serializes one small write chain
-    // per datasource). Gated OFF when a trace sink is installed: the
-    // powa_log contract is a faithful sequential trace and user sinks
-    // need not be thread-safe — tracing keeps the exact old path.
-    // Errors are collected in class order either way, so meta.errors
-    // is deterministic.
-    groupByPriority(active).foreach { group =>
-      errors ++= runOrdered(group, snapshotOne).flatten
-    }
-    meta.snapts = Some(now)
-
-    val phase = (meta.coalesceSeq + srvid % 20) % server.powaCoalesce
-    if (phase == 0) {
-      active.foreach { d =>
-        try d.aggregate(store, srvid)
-        catch { case e: Exception =>
-          errors :+= s"${d.name}_aggregate: ${e.getMessage}" }
-      }
-      meta.aggts = Some(now)
-    }
-    if (phase == 1) {
-      active.foreach { d =>
-        try {
-          val cutoff = d.purgeCutoff(now, registry.retentionSec(srvid, d.name))
-          d.purge(store, srvid, cutoff)
-        } catch { case e: Exception =>
-          errors :+= s"${d.name}_purge: ${e.getMessage}" }
-      }
-      // history small-file maintenance rides the purge cadence —
-      // compactMinFiles <= 0 disables
-      if (compactMinFiles > 0) active.foreach { d =>
-        try d.compact(store, srvid, compactMinFiles)
-        catch { case e: Exception =>
-          errors :+= s"${d.name}_compact: ${e.getMessage}" }
-      }
-      meta.purgets = Some(now)
-    }
-
-    // catalog import pass, remote servers only — runs LAST in the tick
-    // like the reference's v_catname loop (powa--5.2.0.sql:3663-3694)
-    if (srvid != 0)
-      errors ++= catalogs.snapshot(srvid, server.catalogRefreshSec, now)
-
-    meta.errors ++= errors
-    // write THIS server's meta row through (scoped: other servers' rows,
-    // possibly owned by other engines on this root, are left untouched) —
-    // coalesce_seq (the cadence phase), snapts/aggts/purgets and
-    // accumulated errors survive restarts
-    registry.persistMetas(Set(srvid))
-    errors.size
-  }
-
-  // ---- vectorized fleet tick ---------------------------------------
+  private def concurrentSnapshot(srvid: Int) =
+    s"a concurrent snapshot is already running for server $srvid"
 
   /** One acquired per-server snapshot lock (in-process mutex + the
     * cross-process file lock), released in [[releaseLock]]. */
-  private case class HeldLock(srvid: Int,
+  private case class HeldLock(
       mutex: java.util.concurrent.locks.ReentrantLock,
       ch: java.nio.channels.FileChannel,
       fl: java.nio.channels.FileLock)
 
-  /** Try-acquire one server's snapshot lock (same NOWAIT semantics as
-    * [[takeSnapshot]]); None when a concurrent snapshot holds it. */
+  /** Try-acquire one server's snapshot lock, NOWAIT; None when a
+    * concurrent snapshot holds it. */
   private def tryAcquireLock(srvid: Int): Option[HeldLock] = {
     val mutex = snapshotLocks.computeIfAbsent(srvid,
       _ => new java.util.concurrent.locks.ReentrantLock())
@@ -538,7 +398,7 @@ final class Engine(val spark: SparkSession, storageRoot: String) {
         catch { case _: java.nio.channels.OverlappingFileLockException =>
           ch.close(); mutex.unlock(); return None }
       if (fl == null) { ch.close(); mutex.unlock(); return None }
-      Some(HeldLock(srvid, mutex, ch, fl))
+      Some(HeldLock(mutex, ch, fl))
     } catch { case e: Throwable => mutex.unlock(); throw e }
   }
 
@@ -546,149 +406,169 @@ final class Engine(val spark: SparkSession, storageRoot: String) {
     try { h.fl.release(); h.ch.close() } finally h.mutex.unlock()
   }
 
-  /** Vectorized fleet tick — `takeSnapshot` for MANY servers with one
-    * Spark job per (datasource, sink tier) instead of one per (server,
-    * datasource): the snapshot pass reads each datasource's staging
-    * tier ONCE across all staged servers and lands every server's
-    * batch in one partitionBy(srvid) write (GenericDatasource.
-    * snapshotFleet); dimension-bearing datasources (statements,
-    * qualstats, databases) and every per-server phase (cadence bump,
-    * aggregate/purge/compact, catalog import, metas) keep the
-    * per-server path, so each server's visible end state — tiers,
-    * meta row, error log — is IDENTICAL to running [[takeSnapshot]]
-    * per server (EngineSpec pins row-identity; StressR13 measures the
-    * fan-out win).
+  /** One tick. Returns the number of errors (like powa_take_snapshot).
+    * A server whose snapshot lock is held fails fast with an
+    * IllegalStateException (the reference's NOWAIT raise). */
+  def takeSnapshot(srvid: Int,
+      now: java.sql.Timestamp = new java.sql.Timestamp(System.currentTimeMillis())): Int = {
+    if (registry.server(srvid).frequencySec == -1) return 0
+    val held = tryAcquireLock(srvid).getOrElse(
+      throw new IllegalStateException(concurrentSnapshot(srvid)))
+    try tickLocked(Seq(srvid), now).getOrElse(srvid, 0)
+    finally releaseLock(held)
+  }
+
+  /** `takeSnapshot` for MANY servers in one pass: the snapshot pass
+    * reads each datasource's staging tier ONCE across all staged
+    * servers and lands every server's batch in one partitionBy(srvid)
+    * write (GenericDatasource.snapshotFleet) — one Spark job per
+    * (datasource, sink tier) instead of one per (server, datasource).
+    * Each server's visible end state — tiers, meta row, error log — is
+    * IDENTICAL to running [[takeSnapshot]] per server (EngineSpec pins
+    * row-identity).
     *
-    * Semantics preserved per server: the same NOWAIT lock (a server
-    * whose lock is held errors with 1, exactly like a sequential
-    * tick's caller would see, and never blocks the fleet); the same
-    * per-datasource error isolation (a fleet-job failure falls back
-    * to the per-server loop so a single bad server degrades alone —
-    * committed servers' staging is already drained, so the retry
-    * skips them via the hasPartition gate); the same commit protocol
-    * (per-server markers — Store.snapshotCommitFleet). */
+    * A server whose lock is held is not ticked: it records one
+    * "tick: a concurrent snapshot …" error and counts 1, and never
+    * blocks the rest of the fleet. */
   def takeSnapshotFleet(srvids: Seq[Int],
       now: java.sql.Timestamp = new java.sql.Timestamp(System.currentTimeMillis()))
       : Map[Int, Int] = {
-    val ids = srvids.distinct.sorted
-    val held = scala.collection.mutable.ArrayBuffer.empty[HeldLock]
-    val busy = scala.collection.mutable.ArrayBuffer.empty[Int]
-    ids.foreach { id =>
-      tryAcquireLock(id) match {
-        case Some(h) => held += h
-        case None => busy += id
-      }
-    }
+    val locks = srvids.distinct.sorted.map(id => id -> tryAcquireLock(id))
+    val busy = locks.collect { case (id, None) => id }
     try {
-      val servers = held.map(h => h.srvid -> registry.server(h.srvid)).toMap
-      val active = held.map(_.srvid).filter(servers(_).frequencySec != -1)
-      // re-read + bump each persisted meta under the lock, like the
-      // sequential tick (cadence continues where any engine left it)
-      val metas = active.map { id =>
-        val m = registry.refreshMeta(id); m.coalesceSeq += 1; id -> m
-      }.toMap
-      val errors = scala.collection.mutable.Map.empty[Int, Vector[String]]
-        .withDefaultValue(Vector.empty)
-      def activeDs(id: Int) = datasources.filter(d =>
-        registry.isEnabled(id, d.name) &&
-        servers(id).versionNum >= d.spec.minVersion)
-
-      // snapshot pass: priority CLASS order preserved ACROSS the fleet
-      // — every server's databases snapshot lands before any server's
-      // statements snapshot, which honors the same dimension-before-
-      // dependent ordering the per-server walk does. WITHIN a class,
-      // datasources overlap on a bounded pool exactly like the
-      // per-server tick's snapshot pass (disjoint <root>/<ds>/ trees,
-      // per-ds commit markers; trace-sink runs stay sequential): at
-      // production fleet scale the tick otherwise serializes ~20 fleet
-      // writes of the same priority back to back. Each worker RETURNS
-      // its per-server errors; they merge on this thread in class
-      // order, so meta.errors stays deterministic.
-      def fleetOne(d: GenericDatasource): Seq[(Int, String)] = {
-        val staged = active.filter(id =>
-          activeDs(id).contains(d) &&
-          store.hasPartition(d.name, GenericDatasource.Staging, id))
-        if (staged.isEmpty) return Seq.empty
-        try {
-          log(s"running ${d.name}_snapshot fleet x${staged.size}")
-          val ns = d.snapshotFleet(store, staged.toSeq, now)
-          if (store.traceRowcounts)
-            ns.toSeq.sortBy(_._1).foreach { case (id, n) =>
-              log(s"${d.name}_snapshot srvid=$id - rowcount: $n") }
-          Seq.empty
-        } catch { case _: Exception =>
-          // per-server fallback: sequential error isolation — only
-          // the genuinely bad server(s) error; servers the fleet
-          // write already committed have drained staging and are
-          // skipped by the hasPartition gate (retry-safe)
-          staged.toSeq.flatMap { id =>
-            try {
-              if (store.hasPartition(d.name, GenericDatasource.Staging, id)) {
-                val n = d.snapshot(store, id, now)
-                log(s"${d.name}_snapshot srvid=$id - rowcount: $n")
-              }
-              None
-            } catch { case e: Exception =>
-              Some(id -> s"${d.name}_snapshot: ${e.getMessage}") }
-          }
-        }
-      }
-      groupByPriority(datasources).foreach { group =>
-        runOrdered(group, fleetOne).foreach(_.foreach { case (id, msg) =>
-          errors(id) :+= msg })
-      }
-
-      // per-server tail: cadence phases, catalogs, metas — unchanged
-      active.foreach { id =>
-        val meta = metas(id)
-        meta.snapts = Some(now)
-        val server = servers(id)
-        val acts = activeDs(id).sortBy(_.priority)
-        val phase = (meta.coalesceSeq + id % 20) % server.powaCoalesce
-        if (phase == 0) {
-          acts.foreach { d =>
-            try d.aggregate(store, id)
-            catch { case e: Exception =>
-              errors(id) :+= s"${d.name}_aggregate: ${e.getMessage}" }
-          }
-          meta.aggts = Some(now)
-        }
-        if (phase == 1) {
-          acts.foreach { d =>
-            try {
-              val cutoff = d.purgeCutoff(now, registry.retentionSec(id, d.name))
-              d.purge(store, id, cutoff)
-            } catch { case e: Exception =>
-              errors(id) :+= s"${d.name}_purge: ${e.getMessage}" }
-          }
-          if (compactMinFiles > 0) acts.foreach { d =>
-            try d.compact(store, id, compactMinFiles)
-            catch { case e: Exception =>
-              errors(id) :+= s"${d.name}_compact: ${e.getMessage}" }
-          }
-          meta.purgets = Some(now)
-        }
-        if (id != 0)
-          errors(id) ++= catalogs.snapshot(id, server.catalogRefreshSec, now)
-        meta.errors ++= errors(id)
-      }
-      // ONE batched metas write for the whole fleet (vs one per server)
-      if (active.nonEmpty) registry.persistMetas(active.toSet)
-      val busyErrs = busy.map { id =>
-        registry.meta(id).errors :+=
-          s"tick: a concurrent snapshot is already running for server $id"
-        id -> 1
-      }
+      val errs = tickLocked(locks.collect { case (id, Some(_)) => id }, now)
+      busy.foreach(id =>
+        registry.meta(id).errors :+= s"tick: ${concurrentSnapshot(id)}")
       if (busy.nonEmpty) registry.persistMetas(busy.toSet)
-      (active.map(id => id -> errors(id).size) ++ busyErrs).toMap
-    } finally held.foreach(releaseLock)
+      errs ++ busy.map(_ -> 1)
+    } finally locks.flatMap(_._2).foreach(releaseLock)
   }
 
-  /** [[tickDue]]'s fleet form: one vectorized tick over every due
-    * server. */
-  def tickDueFleet(now: java.sql.Timestamp = new java.sql.Timestamp(
-      System.currentTimeMillis())): Map[Int, Int] =
-    takeSnapshotFleet(dueServers(now), now)
+  /** Priority classes of `ds`, ascending (:168-181) — databases (−3)
+    * before statements (−2) before kcache (−1) before the generic rest
+    * (10), so dimension providers run before their dependents; members
+    * keep their registration order within a class so error/log
+    * sequences stay deterministic. */
+  private def groupByPriority(
+      ds: Seq[GenericDatasource]): Seq[Seq[GenericDatasource]] =
+    ds.groupBy(_.priority).toSeq.sortBy(_._1).map(_._2)
+
+  /** The tick body over `ids`, whose snapshot locks the caller holds —
+    * the one orchestrator behind [[takeSnapshot]], [[takeSnapshotFleet]]
+    * and [[tickDue]]. Deactivated servers are skipped; returns the
+    * error count of every server it ticked.
+    *
+    * Snapshot pass: priority CLASS order holds ACROSS the servers —
+    * every server's databases snapshot lands before any server's
+    * statements snapshot. WITHIN a class, datasources write disjoint
+    * directory trees (<root>/<ds>/…, per-ds commit markers), so their
+    * snapshots overlap on [[Pool.drainAll]]. Each worker RETURNS its
+    * trace lines and per-server errors; this thread emits and merges
+    * them in class and registration order, so the `log` sink is only
+    * ever called from here and meta.errors is deterministic. Then the
+    * per-server tail: cadence phases, catalog import, metas. */
+  private def tickLocked(ids: Seq[Int], now: java.sql.Timestamp)
+      : Map[Int, Int] = {
+    val servers = ids.map(id => id -> registry.server(id)).toMap
+    val active = ids.filter(servers(_).frequencySec != -1)
+    // re-read the persisted meta row under the snapshot lock: the
+    // coalesce_seq bump is a read-modify-write of the STORED row, so a
+    // second engine sharing the root continues the cadence where the
+    // first left it instead of replaying its stale in-memory copy
+    val metas = active.map { id =>
+      val m = registry.refreshMeta(id); m.coalesceSeq += 1; id -> m
+    }.toMap
+    val activeDs = active.map(id => id -> datasources.filter(d =>
+      registry.isEnabled(id, d.name) &&
+      servers(id).versionNum >= d.spec.minVersion).sortBy(_.priority)).toMap
+    val errors = scala.collection.mutable.Map.empty[Int, Vector[String]]
+      .withDefaultValue(Vector.empty)
+
+    // One datasource's snapshot over its staged servers. A pass over
+    // several servers that fails falls back to one snapshot per server
+    // so a single bad server degrades alone (servers the fleet write
+    // already committed have drained staging and are skipped by the
+    // hasPartition gate — retry-safe); a one-server pass has nothing
+    // to isolate and records its error once.
+    def snapshotOne(d: GenericDatasource, staged: Seq[Int])
+        : (Seq[String], Seq[(Int, String)]) = {
+      val many = staged.sizeIs > 1
+      def rowcount(id: Int, n: Long) =
+        if (many) s"${d.name}_snapshot srvid=$id - rowcount: $n"
+        else s"${d.name}_snapshot - rowcount: $n"
+      val running = s"running ${d.name}_snapshot" +
+        (if (many) s" fleet x${staged.size}" else "")
+      def failed(id: Int, e: Exception) =
+        id -> s"${d.name}_snapshot: ${e.getMessage}"
+      try {
+        val ns = d.snapshotFleet(store, staged, now)
+        (running +: ns.toSeq.sortBy(_._1).map { case (id, n) =>
+          rowcount(id, n) }, Nil)
+      } catch {
+        case e: Exception if !many => (Seq(running), Seq(failed(staged.head, e)))
+        case _: Exception =>
+          val (lines, errs) = staged
+            .filter(store.hasPartition(d.name, GenericDatasource.Staging, _))
+            .partitionMap { id =>
+              try Left(rowcount(id, d.snapshot(store, id, now)))
+              catch { case e: Exception => Right(failed(id, e)) }
+            }
+          (running +: lines, errs)
+      }
+    }
+
+    groupByPriority(datasources).foreach { group =>
+      // directory-probe fast path: a datasource with nothing staged
+      // launches zero Spark jobs (every snapshot consumes the staging
+      // tier, so an absent partition is a no-op)
+      val work = group.flatMap { d =>
+        val staged = active.filter(id => activeDs(id).contains(d) &&
+          store.hasPartition(d.name, GenericDatasource.Staging, id))
+        if (staged.isEmpty) None else Some(() => snapshotOne(d, staged))
+      }
+      Pool.drainAll(4, work).foreach { case (lines, errs) =>
+        lines.foreach(log)
+        errs.foreach { case (id, msg) => errors(id) :+= msg }
+      }
+    }
+
+    active.foreach { id =>
+      val meta = metas(id)
+      val server = servers(id)
+      meta.snapts = Some(now)
+      def each(step: String)(f: GenericDatasource => Unit): Unit =
+        activeDs(id).foreach { d =>
+          try f(d)
+          catch { case e: Exception =>
+            errors(id) :+= s"${d.name}_$step: ${e.getMessage}" }
+        }
+      val phase = (meta.coalesceSeq + id % 20) % server.powaCoalesce
+      if (phase == 0) {
+        each("aggregate")(_.aggregate(store, id))
+        meta.aggts = Some(now)
+      }
+      if (phase == 1) {
+        each("purge")(d =>
+          d.purge(store, id, d.purgeCutoff(now, registry.retentionSec(id, d.name))))
+        // history small-file maintenance rides the purge cadence —
+        // compactMinFiles <= 0 disables
+        if (compactMinFiles > 0)
+          each("compact")(_.compact(store, id, compactMinFiles))
+        meta.purgets = Some(now)
+      }
+      // catalog import pass, remote servers only — runs LAST in the tick
+      // like the reference's v_catname loop (powa--5.2.0.sql:3663-3694)
+      if (id != 0)
+        errors(id) ++= catalogs.snapshot(id, server.catalogRefreshSec, now)
+      meta.errors ++= errors(id)
+    }
+    // ONE metas write for the pass, scoped to the ticked servers (other
+    // servers' rows, possibly owned by other engines on this root, are
+    // left untouched) — coalesce_seq (the cadence phase),
+    // snapts/aggts/purgets and accumulated errors survive restarts
+    if (active.nonEmpty) registry.persistMetas(active.toSet)
+    active.map(id => id -> errors(id).size).toMap
+  }
 
   /** Readback + rates in one call — the dashboard query (SURVEY §3.3):
     * `powa_stat_get_activity`-shaped reconstitution followed by the
@@ -731,20 +611,17 @@ final class Engine(val spark: SparkSession, storageRoot: String) {
           now.getTime - ts.getTime >= s.frequencySec * 1000L)
     }.sorted
 
-  /** One pass of the scheduler loop: tick every due server, each
-    * individually guarded (a failing server never blocks the fleet —
-    * same isolation as the per-datasource try/catch inside a tick).
-    * Returns per-server error counts. */
+  /** One pass of the scheduler loop: tick every due server in one
+    * [[takeSnapshotFleet]] pass. A server whose lock is held fails
+    * alone, like a failing datasource inside a tick. Returns
+    * per-server error counts. */
   def tickDue(now: java.sql.Timestamp = new java.sql.Timestamp(
       System.currentTimeMillis())): Map[Int, Int] =
-    dueServers(now).map { id =>
-      id -> (try takeSnapshot(id, now)
-             catch { case e: Exception =>
-               registry.meta(id).errors :+= s"tick: ${e.getMessage}"
-               registry.persistMetas(Set(id))
-               1
-             })
-    }.toMap
+    takeSnapshotFleet(dueServers(now), now)
+
+  /** Alias of [[tickDue]] under its fleet name. */
+  def tickDueFleet(now: java.sql.Timestamp = new java.sql.Timestamp(
+      System.currentTimeMillis())): Map[Int, Int] = tickDue(now)
 
   /** powa_reset(srvid) (:6359-6429). */
   def reset(srvid: Int): Unit = {

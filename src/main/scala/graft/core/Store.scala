@@ -74,8 +74,16 @@ final class Store(val spark: SparkSession, val root: String) {
     * coalesce_seq × tick — q33's constvalues pack measurably WANTS
     * codegen), as does the fleet write (one job for the whole fleet).
     * `spark.graft.store.tickCodegen=true` restores codegen for the
-    * tick writes. Session-conf scoping shares StreamTuning.scoped's
-    * documented single-threaded-planning assumption. */
+    * tick writes.
+    *
+    * The switch is SESSION-global conf, not a per-plan hint: while any
+    * scope is open, every plan made on the session — including a
+    * fleet write, an aggregate or a dashboard read planned on another
+    * thread (the tick's datasource pool, a concurrent reader) — also
+    * runs without whole-stage codegen. Results are unaffected (codegen
+    * is an execution strategy, not semantics); only those plans' speed
+    * is. Tick plans that embed no per-tick literal would remove the
+    * recompile, and with it the need for this scope. */
   private val tickScopeLock = new Object
   private var tickScopeDepth = 0
   private var tickScopePrev: Option[String] = None
@@ -702,34 +710,6 @@ final class Store(val spark: SparkSession, val root: String) {
   private def snapMarker(ds: String, srvid: Int): Path =
     Paths.get(root, ds, s".snapcommit_srvid=$srvid")
 
-  /** Run independent pre-commit work units concurrently (optimization
-    * guide §2.6 — actions are only sequential because the driver calls
-    * them sequentially; overlapping them overlaps their PLANNING and
-    * job-scheduling latency, which dominates the engine's small
-    * per-tick writes). First failure is rethrown after every unit
-    * finishes, so the reachable on-disk states are exactly those of a
-    * sequential loop interrupted mid-way — each unit is an independent
-    * write to its own directory, resolved by the same recovery. */
-  private def runConcurrently(work: Seq[() => Unit]): Unit = {
-    if (work.sizeIs <= 1) { work.foreach(_()); return }
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(work.size, 4))
-    try {
-      val fs = work.map { w =>
-        pool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = w()
-        })
-      }
-      var failure: Option[Throwable] = None
-      fs.foreach { f =>
-        try f.get()
-        catch { case e: java.util.concurrent.ExecutionException =>
-          if (failure.isEmpty) failure = Some(e.getCause) }
-      }
-      failure.foreach(throw _)
-    } finally pool.shutdown()
-  }
-
   /** Atomically land a snapshot's sink batches and drain its staging
     * partition — the tick's second transaction boundary. Each (tier,
     * df) in `sinks` is appended to that tier's `srvid` partition;
@@ -755,7 +735,7 @@ final class Store(val spark: SparkSession, val root: String) {
     // the pool starts and restored after every unit has joined, so the
     // concurrent writers only ever READ it
     tickCodegenScope {
-      runConcurrently(sinks.map { case (tier, df) => () =>
+      Pool.drainAll(4, sinks.map { case (tier, df) => () =>
         labeled(s"store: snapshot $ds->$tier srvid=$srvid") {
           df.drop("srvid").write.mode("overwrite")
             .parquet(snapStageDir(ds, tier, srvid).toString)
@@ -862,27 +842,13 @@ final class Store(val spark: SparkSession, val root: String) {
     // commit, which leaves exactly the states N sequential commits
     // interrupted mid-loop would: some rolled forward, the failed one
     // resolved by its marker, the rest retry-safe.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(32, Runtime.getRuntime.availableProcessors()))
-    try {
-      val fs = srvids.map { id =>
-        pool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = {
-            Files.createDirectory(snapMarker(ds, id)) // commit point
-            dropPartition(ds, stagingTier, id)
-            promoteSnapshot(ds, id)
-            Files.deleteIfExists(snapMarker(ds, id))
-          }
-        })
-      }
-      var failure: Option[Throwable] = None
-      fs.foreach { f =>
-        try f.get()
-        catch { case e: java.util.concurrent.ExecutionException =>
-          if (failure.isEmpty) failure = Some(e.getCause) }
-      }
-      failure.foreach(throw _)
-    } finally pool.shutdown()
+    Pool.drainAll(Runtime.getRuntime.availableProcessors() min 32,
+      srvids.map { id => () =>
+        Files.createDirectory(snapMarker(ds, id)) // commit point
+        dropPartition(ds, stagingTier, id)
+        promoteSnapshot(ds, id)
+        Files.deleteIfExists(snapMarker(ds, id))
+      })
   }
 
   /** Sweep `.snapfleet_*` temp dirs a crashed fleet write left behind —

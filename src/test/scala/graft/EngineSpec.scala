@@ -703,6 +703,69 @@ class EngineSpec extends AnyFunSuite {
     assert(lines.contains("powa_stat_bgwriter_snapshot - rowcount: 1"))
   }
 
+  test("traced tick runs the pooled path: lines in registration order, " +
+      "tiers and errors equal to an untraced twin") {
+    import spark.implicits._
+    val traced = mkEngine()
+    val plain = mkEngine()
+    // three same-priority generic datasources (one snapshot pool), one
+    // of them malformed; srvid 24 aggregates on its first tick
+    val staged = Seq("powa_user_functions", "powa_stat_bgwriter",
+      "powa_stat_checkpointer")
+    assert(staged.map(traced.datasource(_).priority).distinct.size === 1)
+    val srvid = 24
+    Seq(traced, plain).foreach { e =>
+      e.registry.registerServer(ServerConfig(
+        id = srvid, hostname = "h", powaCoalesce = 5))
+      e.ingest("powa_user_functions",
+        Seq((srvid, Timestamp.valueOf("2024-01-01 00:01:00"),
+          1L, 10L, 100L, 7.5, 2.5),
+          (srvid, Timestamp.valueOf("2024-01-01 00:01:00"),
+            2L, 11L, 200L, 8.5, 3.5))
+          .toDF("srvid", "ts", "dbid", "funcid", "calls",
+            "total_time", "self_time"))
+      e.ingest("powa_stat_bgwriter", bgwriterBatch(srvid, 1))
+      e.ingest("powa_stat_checkpointer",
+        Seq((srvid, "not-a-timestamp")).toDF("srvid", "ts"))
+    }
+    val lines = scala.collection.mutable.ArrayBuffer[String]()
+    traced.log = lines += _
+    val now = Timestamp.valueOf("2024-01-01 00:01:30")
+    assert(traced.takeSnapshot(srvid, now) === 1)
+    assert(plain.takeSnapshot(srvid, now) === 1)
+
+    val order = traced.datasources.map(_.name).filter(staged.contains)
+    val rowcounts = Map("powa_user_functions" -> 2, "powa_stat_bgwriter" -> 1)
+    assert(lines.toSeq === order.flatMap(n =>
+      s"running ${n}_snapshot" +:
+        rowcounts.get(n).map(c => s"${n}_snapshot - rowcount: $c").toSeq))
+
+    def rows(e: Engine, ds: String, tier: String): Set[String] = {
+      val spec = Specs.byName(ds)
+      val s = if (tier == GenericDatasource.CurrentDb) traced.datasource(ds).dbSpec.get
+              else spec
+      val schema =
+        if (tier.startsWith("history")) GenericDatasource.historyNoSrvid(s)
+        else GenericDatasource.currentNoSrvid(s)
+      e.store.read(ds, tier, schema).collect().map(_.toString).toSet
+    }
+    for (ds <- staged.take(2);
+        tier <- Seq(GenericDatasource.Current, GenericDatasource.History)) {
+      assert(rows(traced, ds, tier) === rows(plain, ds, tier), s"$ds/$tier")
+    }
+    assert(rows(traced, "powa_stat_bgwriter", GenericDatasource.History).size === 1)
+    assert(rows(traced, "powa_user_functions", GenericDatasource.CurrentDb)
+      === rows(plain, "powa_user_functions", GenericDatasource.CurrentDb))
+    // first line only, stage/task ids masked: Spark's ids are session
+    // counters, and the driver stack below the message differs because
+    // the traced tick's rowcount action meets the bad file first
+    def errors(e: Engine) = e.registry.meta(srvid).errors
+      .map(_.linesIterator.next()
+        .replaceAll("""(stage|TID|task) [0-9.]+""", "$1 _"))
+    assert(errors(traced).size === 1)
+    assert(errors(traced) === errors(plain))
+  }
+
   test("aggregate commit protocol: crash recovery is exactly-once") {
     val root = java.nio.file.Files.createTempDirectory("graft_commit").toString
     val e = new Engine(spark, root)
